@@ -38,7 +38,7 @@ import threading
 from pyspark.sql import DataFrame, SparkSession
 
 from privacy_cdc_lakehouse_spark.functions.scalars import pii_salt
-from privacy_cdc_lakehouse_spark.tables import LakeTable, _entry
+from privacy_cdc_lakehouse_spark.tables import LakeTable, _entry, _entry_columns
 
 NAMESPACES = ("bronze", "silver", "monitoring")
 
@@ -64,7 +64,9 @@ def create_namespaces(spark: SparkSession, namespaces=NAMESPACES) -> None:
 def snapshot_sql(table: LakeTable, version: int | None = None) -> str:
     """SQL text selecting the table's snapshot: one ``parquet.`dir```
     scan per data dir, missing-column NULL fill (additive schema
-    evolution), exclusion predicates from partition-scoped merges."""
+    evolution), exclusion predicates from partition-scoped merges.
+    Each dir's column set comes from its recorded entry schema, so
+    building the text runs no Spark job (legacy entries infer it)."""
     v = version if version is not None else table.current_version()
     if v is None:
         raise FileNotFoundError(f"table has no commits: {table.path}")
@@ -83,7 +85,9 @@ def snapshot_sql(table: LakeTable, version: int | None = None) -> str:
     selects = []
     for e in entries:
         path = os.path.join(table.path, e["path"])
-        dir_cols = set(table.spark.read.parquet(path).columns)
+        dir_cols = _entry_columns(e)
+        if dir_cols is None:  # legacy entry: no recorded schema, infer it
+            dir_cols = set(table.spark.read.parquet(path).columns)
         cols = ", ".join(
             f"`{f.name}`"
             if f.name in dir_cols

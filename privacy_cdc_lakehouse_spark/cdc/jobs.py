@@ -306,7 +306,10 @@ def merge_silver(
     downstream consumer tails silver without re-reading snapshots.
     """
     lo = _last_offset(lake)
-    fresh = lake.bronze.read().filter(F.col("offset") > F.lit(lo))
+    # where= rather than filter(): same rows, but footer-stats pruning
+    # drops every bronze dir wholly at or below the checkpoint before
+    # Spark plans the scan.
+    fresh = lake.bronze.read(where=[("offset", ">", lo)])
     if fresh.isEmpty():
         return None
 
@@ -409,13 +412,22 @@ def compute_dq_metrics(lake: Lakehouse) -> int:
 
 
 def _advance_checkpoint(lake: Lakehouse, offset: int) -> None:
-    """Scalar MERGE parity (``merge_orders_silver.py:156-165``)."""
+    """Upsert this pipeline's row, the effect of the reference's scalar
+    MERGE (``merge_orders_silver.py:156-165``), without a join: read the
+    tiny checkpoint table at a base version, keep every row whose
+    ``pipeline`` is not null-safe-equal to ours, union the new row, and
+    commit through the conflict-checked full rewrite ``merge`` ends in.
+    A commit landing between the read and the commit raises
+    :class:`ConcurrentWriteError`, as a racing MERGE would."""
     row = lake.spark.createDataFrame(
         [(PIPELINE, int(offset))], "pipeline string, last_offset long"
     ).withColumn("updated_at", F.current_timestamp())
-    if not lake.checkpoints.exists():
-        lake.checkpoints.overwrite(row)
-    else:
-        # One literal row from createDataFrame — Catalyst estimates the
-        # unknown-size sentinel for it, so vouch for the broadcast.
-        lake.checkpoints.merge(row, keys=["pipeline"], broadcast_hint=True)
+    table = lake.checkpoints
+    base_v = table.current_version()
+    if base_v is None:
+        table.overwrite(row)
+        return
+    others = table.read(version=base_v).filter(
+        ~F.col("pipeline").eqNullSafe(F.lit(PIPELINE))
+    )
+    table._overwrite_checked(others.unionByName(row), base_v, "merge")

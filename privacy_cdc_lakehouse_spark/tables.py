@@ -43,6 +43,16 @@ Scale notes (100 TB):
   strategy for MERGE): only the filtered slice is rewritten; prior data
   dirs stay in the manifest with the filter recorded as an *exclusion
   predicate* that readers push down as a partition filter.
+
+Manifest file entries (``_entry``) are ``{"path", "excludes", "stats",
+"schema"}``. ``schema`` is the data dir's file schema (Spark JSON, every
+field nullable, partition columns left out: exactly what Spark would
+infer from the footers), recorded when the dir is written. ``read()``
+hands it to Spark with ``.schema(...)``, so building a read runs no
+Spark job however many dirs the table has — Delta keeps the schema in
+its log for the same reason. Entries without it (logs written before
+schemas were recorded, v1 string manifests) fall back to footer
+inference, one Spark job per dir.
 """
 
 from __future__ import annotations
@@ -59,7 +69,7 @@ from dataclasses import dataclass
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 from pyspark.sql import functions as F
 
 _LOG_DIR = "_log"
@@ -74,14 +84,63 @@ COMMIT_TS_COL = "_commit_timestamp"
 
 
 def _entry(e) -> dict:
-    """Normalize a manifest file entry (v1 plain string → v2 dict)."""
+    """Normalize a manifest file entry (v1 plain string → v2 dict).
+    ``schema`` (the dir's recorded file schema, see the module
+    docstring) is carried when present; legacy entries have none and
+    read through footer inference."""
     if isinstance(e, str):
         return {"path": e, "excludes": [], "stats": {}}
-    return {
+    out = {
         "path": e["path"],
         "excludes": list(e.get("excludes", [])),
         "stats": dict(e.get("stats", {})),
     }
+    if e.get("schema"):
+        out["schema"] = e["schema"]
+    return out
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, array element and map value nullable,
+    nested types included — the schema Spark writes to parquet, and so
+    the one footer inference reads back."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [
+                StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _file_schema(schema: StructType, partition_by: list[str] | None) -> dict:
+    """The schema a data dir's files carry, as recorded in its manifest
+    entry: the written frame's schema minus the hive partition columns
+    (those live in the paths, and readers keep discovering them there),
+    every field nullable."""
+    part = {c.lower() for c in partition_by or []}
+    return _as_nullable(
+        StructType([f for f in schema.fields if f.name.lower() not in part])
+    ).jsonValue()
+
+
+def _entry_columns(e: dict) -> set[str] | None:
+    """Column names a read of entry ``e``'s dir yields — its recorded
+    file schema plus the hive partition columns in its file paths — or
+    None when the entry records no schema."""
+    if not e.get("schema"):
+        return None
+    cols = {f["name"] for f in e["schema"]["fields"]}
+    for f in e["stats"]:
+        segs = os.path.relpath(f, e["path"]).split(os.sep)[:-1]
+        cols.update(seg.partition("=")[0] for seg in segs if "=" in seg)
+        break  # one dir's files share one partition layout
+    return cols
 
 
 def _utc_naive_iso(v) -> str:
@@ -364,7 +423,12 @@ def _footer_column_stats(full_path: str) -> dict[str, dict]:
             # bounds, exactness claims must not.
             if col.physical_type == "BYTE_ARRAY":
                 agg["trunc"] = True
-            lo, hi = _json_stat(st.min), _json_stat(st.max)
+            try:
+                lo, hi = _json_stat(st.min), _json_stat(st.max)
+            except NotImplementedError:
+                # has_min_max can hold for a type pyarrow cannot cast
+                # its stats to (decimal stored as INT64): unknown range
+                lo = hi = None
             # Non-BYTE_ARRAY values that still encode as JSON strings
             # (timestamps/dates as ISO text) get an explicit
             # trunc=False so stats-only readers can tell a new-format
@@ -876,7 +940,9 @@ class LakeTable:
                     f"CHECK constraint {name!r} violated: {expr}"
                 )
 
-    def _write_data_dir(self, df: DataFrame, partition_by: list[str] | None = None) -> str:
+    def _write_entry(self, df: DataFrame, partition_by: list[str] | None = None) -> dict:
+        """Write ``df`` as a new data dir and return its manifest entry:
+        path, no excludes, footer stats and the recorded file schema."""
         # Constraint gate: EVERY data write funnels through here, so
         # nothing unvalidated can land. Cost is one extra pass over the
         # written batch (Delta validates writes the same way); compact/
@@ -903,7 +969,12 @@ class LakeTable:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(os.path.join(self.path, rel))
-        return rel
+        return {
+            "path": rel,
+            "excludes": [],
+            "stats": self._file_stats(rel),
+            "schema": _file_schema(df.schema, partition_by),
+        }
 
     def _write_change_dir(self, changes: DataFrame) -> str:
         """Write a Change Data Feed file set (rows + ``_change_type``)
@@ -1118,6 +1189,14 @@ class LakeTable:
 
         return [p for p in preds if not naive(p[2])]
 
+    def _reader(self, e: dict):
+        """``spark.read`` for entry ``e``'s data dir: given the recorded
+        file schema when the entry has one, so planning the scan runs no
+        Spark job; footer inference (one job) for legacy entries."""
+        if e.get("schema"):
+            return self.spark.read.schema(StructType.fromJson(e["schema"]))
+        return self.spark.read.option("mergeSchema", "true")
+
     def read(self, version: int | None = None, where=None) -> DataFrame:
         """Read a snapshot. ``where`` — a ``(col, op, literal)`` tuple or
         list of such (ANDed), ops ``= < <= > >=`` — both *prunes* data
@@ -1144,9 +1223,10 @@ class LakeTable:
         # Per-dir reads unioned by name: each data dir is its own
         # partition-discovery root (a single multi-root read rejects
         # hive-partitioned dirs), and unionByName(allowMissingColumns)
-        # reconciles additive schema evolution. mergeSchema covers
-        # mixed-schema files within one dir. compact() collapses the
-        # union when the dir list grows.
+        # reconciles additive schema evolution. Each dir is read with
+        # its recorded file schema (``_reader``); legacy entries infer
+        # it, and mergeSchema covers mixed-schema files within one of
+        # them. compact() collapses the union when the dir list grows.
         #
         # ``excludes`` are predicates from partition-scoped merges: rows
         # matching any exclude were superseded by a newer dir. When the
@@ -1167,7 +1247,7 @@ class LakeTable:
             # recorded; a physical walk covers stats-less entries).
             if not e["stats"] and not _dir_has_parquet(base):
                 continue
-            reader = self.spark.read.option("mergeSchema", "true")
+            reader = self._reader(e)
             if prune_preds and e["stats"]:
                 sview = self._stats_with_blooms(e["stats"], prune_preds)
                 keep = [
@@ -1197,7 +1277,7 @@ class LakeTable:
             # later appends and break the read().filter(...)
             # equivalence.
             dfs = [
-                self.spark.read.option("mergeSchema", "true")
+                self._reader(e)
                 .parquet(os.path.join(self.path, e["path"]))
                 .limit(0)
                 for e in files
@@ -1316,14 +1396,12 @@ class LakeTable:
                     else set()
                 )
                 added = [
-                    e["path"]
-                    for e in self._snapshot_files(v)
-                    if e["path"] not in prev
+                    e for e in self._snapshot_files(v) if e["path"] not in prev
                 ]
-                for rel in added:
+                for e in added:
                     df = (
-                        self.spark.read.option("mergeSchema", "true")
-                        .parquet(os.path.join(self.path, rel))
+                        self._reader(e)
+                        .parquet(os.path.join(self.path, e["path"]))
                         .withColumn(CHANGE_TYPE_COL, F.lit("insert"))
                     )
                     parts.append(stamp(df, v, ts))
@@ -1604,8 +1682,8 @@ class LakeTable:
 
         entries = [
             {
+                **e,
                 "path": absolutize(e["path"]),
-                "excludes": list(e["excludes"]),
                 "stats": {
                     absolutize(k): st for k, st in e["stats"].items()
                 },
@@ -1717,9 +1795,7 @@ class LakeTable:
                         f"{sorted(extra)}; pass merge_schema=True to evolve "
                         f"the schema"
                     )
-        rel = self._write_data_dir(df, spec)
-        stats = self._file_stats(rel)
-        new_entry = {"path": rel, "excludes": [], "stats": stats}
+        new_entry = self._write_entry(df, spec)
         return self._commit(
             lambda latest: ([_entry(e) for e in latest["files"]] if latest else [])
             + [new_entry],
@@ -1740,12 +1816,11 @@ class LakeTable:
             if partition_by is not None
             else (self._manifest(v).get("partition_by", []) if v is not None else [])
         )
-        rel = self._write_data_dir(df, spec)
-        stats = self._file_stats(rel)
+        new_entry = self._write_entry(df, spec)
         # delta=None: an overwrite's full list is one entry, so every
         # overwrite is a (free) checkpoint that resets the replay chain.
         return self._commit(
-            lambda latest: [{"path": rel, "excludes": [], "stats": stats}],
+            lambda latest: [new_entry],
             "overwrite",
             spec,
         )
@@ -2311,10 +2386,8 @@ class LakeTable:
             ]
         )
         spec = self._manifest(base_v).get("partition_by", [])
-        rel = self._write_data_dir(updated, spec)
-        stats = self._file_stats(rel)
-        new_entry = {"path": rel, "excludes": [], "stats": stats}
-        extra = self._empty_write_extra(updated, rel, None)
+        new_entry = self._write_entry(updated, spec)
+        extra = self._empty_write_extra(updated, new_entry["path"], None)
         if write_change_data:
             pre = hit_rows.withColumn(CHANGE_TYPE_COL, F.lit("update_preimage"))
             post = updated.withColumn(
@@ -2425,10 +2498,8 @@ class LakeTable:
         # PCL_OPTIMIZE_WRITE=0 restores the pass-through layout.
         if spec and os.environ.get("PCL_OPTIMIZE_WRITE") != "0":
             rewritten = rewritten.repartition(*[F.col(c) for c in spec])
-        rel = self._write_data_dir(rewritten, spec)
-        stats = self._file_stats(rel)
-        extra = self._empty_write_extra(rewritten, rel, extra)
-        new_entry = {"path": rel, "excludes": [], "stats": stats}
+        new_entry = self._write_entry(rewritten, spec)
+        extra = self._empty_write_extra(rewritten, new_entry["path"], extra)
 
         def build(latest: dict | None) -> list[dict]:
             prior = [_entry(e) for e in latest["files"]] if latest else []
@@ -2496,9 +2567,8 @@ class LakeTable:
             if base_version is not None
             else []
         )
-        rel = self._write_data_dir(df, spec)
-        stats = self._file_stats(rel)
-        extra = self._empty_write_extra(df, rel, extra)
+        new_entry = self._write_entry(df, spec)
+        extra = self._empty_write_extra(df, new_entry["path"], extra)
 
         def build(latest: dict | None) -> list[dict]:
             prior_paths = (
@@ -2510,7 +2580,7 @@ class LakeTable:
                     f"commit (file set changed); retry against the new "
                     f"snapshot"
                 )
-            return [{"path": rel, "excludes": [], "stats": stats}]
+            return [new_entry]
 
         return self._commit(build, op, spec, extra=extra)
 

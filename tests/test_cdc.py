@@ -3,6 +3,8 @@ incremental-merge == full-rebuild equivalence, checkpoint advance."""
 
 from __future__ import annotations
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from privacy_cdc_lakehouse_spark.cdc.jobs import (
@@ -411,3 +413,60 @@ def test_forget_user_merge_on_read_tombstone_path(spark, sf_dir, tmp_path):
     lake.silver.compact(target_partitions=2)
     lake.silver.vacuum(retain_last=1, min_age_seconds=0)
     assert lake.silver.read().filter(F.col("user_id") == uid).count() == 0
+
+
+def _checkpoint_rows(lake):
+    return sorted(
+        (r["pipeline"] or "", r["last_offset"])
+        for r in lake.checkpoints.read().collect()
+    )
+
+
+def _checkpoint_df(spark, rows):
+    return spark.createDataFrame(
+        rows, "pipeline string, last_offset long"
+    ).withColumn("updated_at", F.current_timestamp())
+
+
+def test_checkpoint_advance_replaces_only_this_pipeline(spark, tmp_path, monkeypatch):
+    """The advance upserts the ``orders`` row without a MERGE: another
+    pipeline's row and a NULL-pipeline row survive untouched."""
+    from privacy_cdc_lakehouse_spark.cdc import jobs
+    from privacy_cdc_lakehouse_spark.tables import LakeTable
+
+    lake = Lakehouse(spark, str(tmp_path / "ckpt"))
+    lake.checkpoints.overwrite(
+        _checkpoint_df(spark, [("orders", 5), ("other", 7), (None, 9)])
+    )
+
+    def no_merge(*args, **kwargs):
+        raise AssertionError("the checkpoint advance must not run a MERGE")
+
+    monkeypatch.setattr(LakeTable, "merge", no_merge)
+    jobs._advance_checkpoint(lake, 42)
+    assert _checkpoint_rows(lake) == [("", 9), ("orders", 42), ("other", 7)]
+    assert lake.checkpoints.history()[0]["op"] == "merge"
+
+
+def test_checkpoint_advance_detects_concurrent_commit(spark, tmp_path, monkeypatch):
+    """A commit landing between the advance's read and its commit
+    raises ConcurrentWriteError and the racing row survives."""
+    from privacy_cdc_lakehouse_spark.cdc import jobs
+    from privacy_cdc_lakehouse_spark.tables import ConcurrentWriteError, LakeTable
+
+    lake = Lakehouse(spark, str(tmp_path / "ckpt_race"))
+    lake.checkpoints.overwrite(_checkpoint_df(spark, [("orders", 5)]))
+    orig_commit = LakeTable._commit
+    raced = []
+
+    def racing_commit(self, build, op, partition_by=None, **kw):
+        if op == "merge" and not raced:
+            raced.append(op)
+            lake.checkpoints.append(_checkpoint_df(spark, [("other", 7)]))
+        return orig_commit(self, build, op, partition_by, **kw)
+
+    monkeypatch.setattr(LakeTable, "_commit", racing_commit)
+    with pytest.raises(ConcurrentWriteError):
+        jobs._advance_checkpoint(lake, 42)
+    assert raced
+    assert _checkpoint_rows(lake) == [("orders", 5), ("other", 7)]
